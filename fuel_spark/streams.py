@@ -8,10 +8,18 @@ This is the switch-over surface for a fuel user: wrap any DataFrame,
 pick an iteration scheme, and iterate epochs of numpy minibatches —
 ``next(epoch)`` yields ``{source_name: np.ndarray}`` exactly like
 fuel's ``as_dict`` iterators.  Underneath, batch identity is computed
-distributed (fuel_spark.schemes) and rows stream to the driver through
-``toLocalIterator`` (one partition in flight, Arrow-encoded) — the
-training loop consumes 100 TB without the driver ever holding more
-than a batch.
+distributed (fuel_spark.schemes) and the epoch reaches the driver as
+Arrow record batches encoded on the JVM (``Dataset.toArrowBatchRdd``,
+no Python worker), served one partition at a time in partition order
+with the next partition prefetched — the training loop consumes
+100 TB without the driver ever holding more than two partitions.
+
+There is no per-epoch sort: the scheme assigns ``pos`` over a
+range-sorted, checkpointed layout and joins it to a broadcast offsets
+table, which keeps the partitions and their row order, so reading the
+partitions in order IS reading in ``pos`` order.  The driver checks
+that contract on every Arrow batch (``pos`` contiguous from the
+epoch's start) and raises if a plan change ever breaks it.
 
 Shuffled epochs re-key per epoch (seed + epoch), matching fuel's
 fresh-permutation-per-epoch contract without any driver-side index
@@ -20,12 +28,77 @@ state.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
+import pyarrow as pa
+from pyspark.errors import PySparkTypeError
+from pyspark.serializers import NoOpSerializer
 from pyspark.sql import DataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+)
+from pyspark.util import _local_iterator_from_socket
 
 from fuel_spark import schemes
+
+# Spark types whose null-free Arrow column converts vectorised to the
+# dtype numpy infers from the same Python values (ints → int64,
+# floats → float64, bools → bool); every other column, and any slice
+# with a null, goes through the Python values.
+_VECTOR_DTYPES = {
+    LongType: np.int64, IntegerType: np.int64, ShortType: np.int64,
+    ByteType: np.int64, DoubleType: np.float64, FloatType: np.float64,
+    BooleanType: np.bool_,
+}
+
+
+def _column_converter(name: str, dt: DataType) -> Callable[[pa.Array], np.ndarray]:
+    """Arrow column → the array ``np.asarray`` builds from the values a
+    collected ``Row`` holds (same values, same dtype).
+
+    Null-free int64 and float64 slices are zero-copy, read-only views
+    of the Arrow buffer; bools are unpacked, narrower ints and float32
+    widened exactly.  Everything else becomes the Row's Python values
+    first (datetimes local and naive, ``bytearray`` binaries, ``Row``
+    structs, ``dict`` maps) — Spark's own Arrow-to-Row conversion."""
+    try:
+        to_arrow_type(dt)
+    except PySparkTypeError as exc:
+        raise TypeError(
+            f"DataStream cannot deliver column {name!r} of type "
+            f"{dt.simpleString()}: it has no Arrow mapping; cast or drop "
+            "it before building the stream") from exc
+    dtype = _VECTOR_DTYPES.get(type(dt))
+    to_row = ArrowTableToRowsConversion._create_converter(
+        dt, none_on_identity=True, binary_as_bytes=False)
+
+    def convert(col: pa.Array) -> np.ndarray:
+        if dtype is not None and col.null_count == 0:
+            return col.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+        values = col.to_pylist()
+        return np.asarray(values if to_row is None else [to_row(v) for v in values])
+
+    return convert
+
+
+def _arrow_batches(df: DataFrame) -> Iterator[pa.RecordBatch]:
+    """``df``'s Arrow record batches, encoded on the executors and read
+    one partition at a time in partition order (next one prefetched)."""
+    schema = to_arrow_schema(df.schema)
+    jvm = df.sparkSession.sparkContext._jvm
+    sock_info = jvm.PythonRDD.toLocalIteratorAndServe(df._jdf.toArrowBatchRdd(), True)
+    for buf in _local_iterator_from_socket(sock_info, NoOpSerializer()):
+        yield pa.ipc.read_record_batch(pa.py_buffer(buf), schema)
 
 
 class DataStream:
@@ -39,6 +112,11 @@ class DataStream:
     shuffled : bool — fresh seeded permutation each epoch
         (fuel ShuffledScheme; reference schemes.py:195).
     seed : int — base seed; epoch ``e`` uses ``seed + e``.
+
+    Every column must have an Arrow mapping (``TypeError`` otherwise).
+    A batch column holds the values and dtype ``np.asarray`` gives for
+    the collected rows; null-free int64 and float64 columns are
+    read-only views of the Arrow buffer (copy one to write to it).
     """
 
     def __init__(
@@ -55,6 +133,9 @@ class DataStream:
         self.shuffled = shuffled
         self.seed = seed
         self._epoch = 0
+        self._converters = [
+            _column_converter(f.name, f.dataType) for f in df.schema.fields
+        ]
 
     @property
     def sources(self) -> tuple[str, ...]:
@@ -68,6 +149,8 @@ class DataStream:
         return schemes.sequential_batches(self.df, self.key, self.batch_size)
 
     def _epoch_df(self, epoch: int, from_batch: int = 0) -> DataFrame:
+        """The epoch's rows in partition order: the sources, then
+        ``pos`` (kept for the order check in :meth:`_ordered_batches`)."""
         planned = self._planned(epoch)
         if from_batch:
             # batch ids are a deterministic function of (key, seed,
@@ -76,21 +159,48 @@ class DataStream:
             # pickle (fuel serializes the in-flight iterator instead:
             # reference fuel/iterator.py:8, tests/test_serialization.py).
             planned = planned.where(planned["batch_id"] >= from_batch)
-        return planned.orderBy("pos").drop("pos", "batch_id")
+        return planned.drop("batch_id")
+
+    def _ordered_batches(self, epoch: int, from_batch: int) -> Iterator[pa.RecordBatch]:
+        """The epoch's Arrow batches, sources only, after checking that
+        ``pos`` runs contiguously from ``from_batch * batch_size``."""
+        df = self._epoch_df(epoch, from_batch)
+        pos_i = df.columns.index("pos")
+        sources = [i for i in range(len(df.columns)) if i != pos_i]
+        expected = from_batch * self.batch_size
+        for rb in _arrow_batches(df):
+            n = rb.num_rows
+            pos = rb.column(pos_i).to_numpy()
+            if not np.array_equal(pos, np.arange(expected, expected + n)):
+                raise RuntimeError(
+                    f"DataStream epoch {epoch}: an Arrow batch starts at "
+                    f"pos {pos[0]} where {expected} was expected (or is not "
+                    "contiguous); the plan no longer delivers partitions "
+                    "in pos order")
+            expected += n
+            yield rb.select(sources)
 
     def _batched_iter(self, epoch: int, from_batch: int, as_dict: bool) -> Iterator:
         cols = self.df.columns
 
         def gen():
-            buf: list[tuple] = []
-            df = self._epoch_df(epoch, from_batch)
-            for row in df.toLocalIterator(prefetchPartitions=True):
-                buf.append(tuple(row))
-                if len(buf) == self.batch_size:
-                    yield self._to_batch(buf, cols, as_dict)
-                    buf = []
-            if buf:
-                yield self._to_batch(buf, cols, as_dict)
+            # slices of Arrow batches add up to one minibatch; a
+            # minibatch spanning an Arrow-batch (or partition) boundary
+            # carries its head over to the next Arrow batch
+            pieces: list[pa.RecordBatch] = []
+            held = 0
+            for rb in self._ordered_batches(epoch, from_batch):
+                off = 0
+                while off < rb.num_rows:
+                    take = min(self.batch_size - held, rb.num_rows - off)
+                    pieces.append(rb.slice(off, take))
+                    held += take
+                    off += take
+                    if held == self.batch_size:
+                        yield self._to_batch(pieces, cols, as_dict)
+                        pieces, held = [], 0
+            if pieces:
+                yield self._to_batch(pieces, cols, as_dict)
 
         return gen()
 
@@ -123,9 +233,13 @@ class DataStream:
     def reset(self) -> None:
         self._epoch = 0
 
-    @staticmethod
-    def _to_batch(rows: list[tuple], cols: list[str], as_dict: bool):
-        arrays = [np.asarray(col) for col in zip(*rows)]
+    def _to_batch(self, pieces: list[pa.RecordBatch], cols: list[str], as_dict: bool):
+        if len(pieces) == 1:
+            columns = pieces[0].columns
+        else:
+            columns = [pa.concat_arrays([p.column(i) for p in pieces])
+                       for i in range(len(cols))]
+        arrays = [conv(c) for conv, c in zip(self._converters, columns)]
         if as_dict:
             return dict(zip(cols, arrays))
         return tuple(arrays)

@@ -117,11 +117,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_sessionize_state_spans_micro_batches",
     "test_streaming.py::test_sessionize_stateful_matches_batch_twin",
     "test_streaming.py::test_windowed_stream_matches_batch",
-    "test_streams.py::test_resume_mid_epoch_identical_remainder",
-    "test_streams.py::test_resume_sequential_and_edge_batches",
-    "test_streams.py::test_sequential_epoch_batches",
-    "test_streams.py::test_shuffled_epochs_differ_and_reset",
-    "test_streams.py::test_tuple_batches",
     "test_text_dedup.py::test_apply_dedup_keeps_canonicals",
     "test_text_dedup.py::test_apply_dedup_prepass_identical_survivors",
     "test_text_dedup.py::test_bigram_logprob_half_boundary_deterministic",
